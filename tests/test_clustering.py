@@ -239,7 +239,7 @@ def test_pq_survives_empty_clusters(spark, tmp_path):
         rows, "vec_id long, embedding array<float>, label int"
     ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
 
-    books = _pq_fit(spark, str(tmp_path))
+    books, _ = _pq_fit(spark, str(tmp_path))
     assert any(len(cents) < PQ_K for cents in books)  # clusters did empty
     codes = pq_codes_query(spark, str(tmp_path)).collect()
     for r in codes:
@@ -641,26 +641,31 @@ def test_gemm_assign_bit_identical_to_expression_path(spark, sf_dir, monkeypatch
     expansion in int64), same double division, same lowest-cluster tie
     break — assignments must agree row-for-row with the kernel forced on
     and forced off, across every registered k shape (floor k=32 and the
-    binding gate fit)."""
+    binding gate fit). The model cache is reset before each forced mode,
+    so the Lloyd fit rounds are compared too, not only the final
+    assignment."""
     import youtube_api_batch_process_with_analytics_spark.operators.clustering as cl
 
     def run(query):
         return sorted(map(tuple, query(spark, sf_dir).collect()))
 
     for query in (cl.semantic_dedup, cl.semantic_dedup_fitted):
+        monkeypatch.setattr(cl, "_KMEANS_MODEL_CACHE", {})
         monkeypatch.setattr(cl, "GEMM_ASSIGN_MIN_WORK", 10**18)
         expr_rows = run(query)
+        monkeypatch.setattr(cl, "_KMEANS_MODEL_CACHE", {})
         monkeypatch.setattr(cl, "GEMM_ASSIGN_MIN_WORK", 0)
         gemm_rows = run(query)
         assert expr_rows == gemm_rows and expr_rows
 
 
-def test_gemm_assign_property_differential(spark):
+def test_gemm_assign_property_differential(spark, monkeypatch):
     """Property differential for the GEMM kernel on synthetic integer
     vectors: random qvecs and random (sum, count) centroid dicts —
     including magnitudes near the documented exactness envelope
     (n_cell·|q| well below 3e9) and exact-tie constructions — must
-    produce identical assignments through both paths. Seeded, not
+    produce identical assignments through both paths, for one
+    whole-vector part and for M slice parts in one call. Seeded, not
     hypothesis-driven, so the fixture is reproducible."""
     import random
 
@@ -693,7 +698,9 @@ def test_gemm_assign_property_differential(spark):
             .collect()
         )
         gemm_rows = dict(
-            cl._gemm_assign(df, cents).select("vec_id", "cluster").collect()
+            cl._gemm_argmin(df, [(0, None, cents, "cluster")])
+            .select("vec_id", "cluster")
+            .collect()
         )
         assert expr_rows == gemm_rows, f"trial {trial} diverged"
         # envelope sanity: the largest |n·x − s| term stays far inside
@@ -703,9 +710,50 @@ def test_gemm_assign_property_differential(spark):
         term = n_max * 8000 + s_max
         assert d * term * term < 2**63 - 1
 
+    # multi-part: M=4 slices of width 4 in ONE call, each with its own
+    # codebook of non-contiguous ids, routed with the threshold forced
+    # both ways. Exact ties: duplicates of row 0, and an all-zero row
+    # equidistant to a centroid pair ±v/20 (|v| small, so the pair is
+    # its nearest) in every slice — the lowest id of the pair must win.
+    m_sub, width = 4, d // 4
+    books, tie_ids = [], []
+    for _ in range(m_sub):
+        ids = rng.sample(range(100), 5)
+        book = {
+            c: ([rng.randint(-8000 * 20, 8000 * 20) for _ in range(width)], 20)
+            for c in ids
+        }
+        v = [rng.randint(1, 10) for _ in range(width)]
+        book[ids[0]] = ([20 * x for x in v], 20)
+        book[ids[1]] = ([-20 * x for x in v], 20)
+        books.append(book)
+        tie_ids.append(min(ids[0], ids[1]))
+    rows = [
+        (i, [rng.randint(-8000, 8000) for _ in range(d)]) for i in range(200)
+    ]
+    rows += [(200 + j, list(rows[0][1])) for j in range(3)]
+    rows += [(300, [0] * d)]
+    df = spark.createDataFrame(rows, "vec_id long, qvec array<long>")
+    parts = [(m * width, width, bk, f"code_{m}") for m, bk in enumerate(books)]
+    outs = [f"code_{m}" for m in range(m_sub)]
+
+    def routed(threshold):
+        monkeypatch.setattr(cl, "GEMM_ASSIGN_MIN_WORK", threshold)
+        out = cl._assign(df, parts, len(rows), 8000)
+        plan = out._jdf.queryExecution().logical().toString()
+        got = {r[0]: tuple(r[1:]) for r in out.select("vec_id", *outs).collect()}
+        return got, plan
+
+    expr_rows, expr_plan = routed(10**18)
+    gemm_rows, gemm_plan = routed(0)
+    assert "MapInPandas" not in expr_plan and "MapInPandas" in gemm_plan
+    assert expr_rows == gemm_rows
+    assert gemm_rows[300] == tuple(tie_ids)
+    assert gemm_rows[200] == gemm_rows[201] == gemm_rows[202] == gemm_rows[0]
+
 
 def test_pq_codes_gemm_bit_identical_to_expression_path(spark, sf_dir, monkeypatch):
-    """Round 13: the fused PQ-code kernel (_gemm_assign_codes — ONE
+    """The argmin kernel with M slice parts (_gemm_argmin — ONE
     mapInPandas pass assigning all M codes) is the EXACT twin of the M
     per-subspace expression folds: same integer-exact distances, same
     double division, same lowest-code tie break. pq_codes_query must
@@ -719,19 +767,31 @@ def test_pq_codes_gemm_bit_identical_to_expression_path(spark, sf_dir, monkeypat
         plan = df._jdf.queryExecution().executedPlan().toString()
         return sorted(map(tuple, df.collect())), plan
 
-    monkeypatch.setattr(cl, "GEMM_ASSIGN_MIN_WORK", 10**18)
+    def force(threshold):
+        # fresh model caches: the PQ-fit and Lloyd rounds run in the
+        # forced mode too, not only the final encode
+        monkeypatch.setattr(cl, "_PQ_MODEL_CACHE", {})
+        monkeypatch.setattr(cl, "_KMEANS_MODEL_CACHE", {})
+        monkeypatch.setattr(cl, "GEMM_ASSIGN_MIN_WORK", threshold)
+
+    force(10**18)
     expr_rows, expr_plan = run()
     assert "MapInPandas" not in expr_plan
-    monkeypatch.setattr(cl, "GEMM_ASSIGN_MIN_WORK", 0)
+    force(0)
     gemm_rows, gemm_plan = run()
     assert gemm_plan.count("MapInPandas") == 1
     assert expr_rows == gemm_rows and expr_rows
 
-    # the IVFADC composition routes the same encode — full-query parity
-    monkeypatch.setattr(cl, "GEMM_ASSIGN_MIN_WORK", 10**18)
+    # the IVFADC composition assigns cell AND codes in one routed call —
+    # full-query parity, and one Python boundary in the forced plan
+    force(10**18)
     expr_ivf = sorted(map(tuple, cl.ivf_pq_topk(spark, sf_dir).collect()))
-    monkeypatch.setattr(cl, "GEMM_ASSIGN_MIN_WORK", 0)
-    gemm_ivf = sorted(map(tuple, cl.ivf_pq_topk(spark, sf_dir).collect()))
+    force(0)
+    ivf = cl.ivf_pq_topk(spark, sf_dir)
+    assert ivf._jdf.queryExecution().executedPlan().toString().count(
+        "MapInPandas"
+    ) == 1
+    gemm_ivf = sorted(map(tuple, ivf.collect()))
     assert expr_ivf == gemm_ivf and expr_ivf
 
 
@@ -799,8 +859,8 @@ def test_gemm_envelope_check_routes_fallback(spark):
         [(i, [i % 5] * d) for i in range(10)], "vec_id long, qvec array<long>"
     )
     # work volume forced over the threshold: envelope decides the route
-    gemm = cl._assign_cluster(df, ok_cents, 10**9, xb)
-    expr = cl._assign_cluster(df, bad_cents, 10**9, xb)
+    gemm = cl._assign(df, [(0, None, ok_cents, "cluster")], 10**9, xb)
+    expr = cl._assign(df, [(0, None, bad_cents, "cluster")], 10**9, xb)
     assert "MapInPandas" in gemm._jdf.queryExecution().logical().toString()
     assert "MapInPandas" not in expr._jdf.queryExecution().logical().toString()
     # and both routes still assign (tiny sanity execute on the safe dict)
@@ -847,11 +907,11 @@ def test_semdedup_pair_kernel_bit_identical_to_expression_path(
         return sorted(map(tuple, df.collect())), plan
 
     try:
-        monkeypatch.setattr(cl, "SEMDEDUP_GEMM_MODE", "0")
+        monkeypatch.setattr(cl, "SEMDEDUP_GEMM_MIN_WORK", 10**18)
         expr_rows, expr_plan = run()
         assert "FlatMapGroupsInPandas" not in expr_plan
         assert "Window" in expr_plan  # the rank pool on the expression path
-        monkeypatch.setattr(cl, "SEMDEDUP_GEMM_MODE", "1")
+        monkeypatch.setattr(cl, "SEMDEDUP_GEMM_MIN_WORK", 0)
         gemm_rows, gemm_plan = run()
         assert "FlatMapGroupsInPandas" in gemm_plan
         assert "Window" not in gemm_plan
@@ -860,9 +920,9 @@ def test_semdedup_pair_kernel_bit_identical_to_expression_path(
         # cap-binding variant: layer-1 sub-buckets AND the layer-2 rank
         # cap must survive the kernel translation (candidates = cap
         # lowest ids)
-        monkeypatch.setattr(cl, "SEMDEDUP_GEMM_MODE", "0")
+        monkeypatch.setattr(cl, "SEMDEDUP_GEMM_MIN_WORK", 10**18)
         expr_cap, _ = run(cell_cap=2, sub_bits=2)
-        monkeypatch.setattr(cl, "SEMDEDUP_GEMM_MODE", "1")
+        monkeypatch.setattr(cl, "SEMDEDUP_GEMM_MIN_WORK", 0)
         gemm_cap, _ = run(cell_cap=2, sub_bits=2)
         assert expr_cap == gemm_cap and expr_cap
     finally:

@@ -220,12 +220,8 @@ def _dist_sql(svec: list[int], n: int, col: str = "qvec") -> str:
     )
 
 
-def _int_assign_expr(
-    cents: dict[int, tuple[list[int], int]],
-    field: str = "cluster",
-    col: str = "qvec",
-):
-    """argmin_c  Σ(n_c·x − s_c)² / n_c²  as a map-only Column over qvec.
+def _dist_structs(cents: dict[int, tuple[list[int], int]], field: str, col: str) -> str:
+    """SQL: ``named_struct('d', dist, field, id)`` per centroid, in id order.
 
     Built as ONE SQL string handed to ``F.expr`` — the k×d literal matrix
     parses JVM-side in a single py4j call. The equivalent Column-API
@@ -233,11 +229,27 @@ def _int_assign_expr(
     calls per Lloyd round), which measurably drags the driver (~0.5s per
     round in a long-lived session) while producing the identical
     expression tree."""
-    structs = ", ".join(
+    return ", ".join(
         f"named_struct('d', {_dist_sql(*cents[c], col=col)}, '{field}', {int(c)})"
         for c in sorted(cents)
     )
-    return F.expr(f"array_min(array({structs})).{field}")
+
+
+def _int_assign_expr(cents: dict[int, tuple[list[int], int]], col: str = "qvec"):
+    """argmin_c  Σ(n_c·x − s_c)² / n_c²  as a map-only Column over ``col``
+    (a column name or SQL expression); ties break to the lowest id."""
+    return F.expr(f"array_min(array({_dist_structs(cents, 'cluster', col)})).cluster")
+
+
+# An argmin part: (slice start, slice width — None for the whole vector,
+# codebook {id: (sum_vector, n)}, output column). k-means is one
+# whole-vector part; a PQ encode is PQ_M slice parts; ivf_pq_topk's
+# candidate index is both at once.
+Part = tuple[int, "int | None", dict[int, tuple[list[int], int]], str]
+
+
+def _part_sql(col: str, start: int, width: int | None) -> str:
+    return col if width is None else f"slice({col}, {start + 1}, {width})"
 
 
 # Assignment-kernel selection: argmin-over-k×d is n·k·d work however it
@@ -249,46 +261,61 @@ def _int_assign_expr(
 # mapInPandas GEMM kernel takes over. The kernel is BIT-IDENTICAL, not
 # approximately equal: it computes the same integer-exact distance by
 # algebraic expansion — Σ(n·x−s)² = n²Σx² − 2nΣxs + Σs², exact in int64
-# (bound: n_cell·|q| < 3e9, i.e. quantized components within ±3e9/cell
-# size — the fixtures sit 6 orders of magnitude inside it) — then the
-# identical CAST-to-double division and the identical lowest-cluster tie
-# break, so the choice is invisible in results and gated tiers keep the
-# expression plan (sf0.01: n·k ≤ 25k at every registered k). Measured:
-# the k=200 gate fit at sf0.1 drops 12.2s → ~2s cold; semantic_dedup at
-# sf3 (n·k = 5.6M) drops ~18s → ~12s.
-GEMM_ASSIGN_MIN_WORK = 200_000  # n_rows × k
+# inside the envelope ``_gemm_envelope_ok`` checks — then the identical
+# CAST-to-double division and the identical lowest-id tie break, so the
+# choice is invisible in results and gated tiers keep the expression plan
+# (sf0.01: n·Σk ≤ 25k at every registered k). Measured: the k=200 gate
+# fit at sf0.1 drops 12.2s → ~2s cold; semantic_dedup at sf3 (n·k = 5.6M)
+# drops ~18s → ~12s.
+GEMM_ASSIGN_MIN_WORK = 200_000  # n_rows × Σ k_part
 
 
-def _gemm_assign(df: DataFrame, cents: dict[int, tuple[list[int], int]],
-                 field: str = "cluster", col: str = "qvec") -> DataFrame:
-    """Arrow-vectorized twin of ``_int_assign_expr`` (same argmin, same
-    integer-exact distances, same tie-break) — one batched integer GEMM
-    per Arrow batch instead of k interpreted fold expressions per row.
-    The sixth sanctioned Arrow kernel (PLANS.md)."""
+def _gemm_argmin(df: DataFrame, parts: list[Part], col: str = "qvec") -> DataFrame:
+    """Arrow-vectorized twin of ``_int_assign_expr`` for every part at
+    once: ONE ``mapInPandas`` pass, one batched integer GEMM per part per
+    Arrow batch instead of k interpreted fold expressions per row and
+    part, and one Python boundary however many parts ride it. Same
+    integer-exact distances, same division, same tie-break (pinned in
+    tests/test_clustering.py). An opaque kernel defeats column pruning, so
+    callers pre-project to the columns the downstream needs."""
     import numpy as np
     from pyspark.sql import types as T
 
-    ids = sorted(cents)
-    S = np.array([cents[c][0] for c in ids], dtype=np.int64)  # (k, d)
-    nv = np.array([cents[c][1] for c in ids], dtype=np.int64)  # (k,)
-    ss = (S * S).sum(axis=1)  # (k,) Σs²
-    n2 = (nv * nv).astype(np.float64)  # divisor, exact below 2^53
-    nn = nv * nv  # int64 n² for the exact integer term
-    id_arr = np.array(ids, dtype=np.int32)
-    schema = T.StructType(df.schema.fields + [T.StructField(field, T.IntegerType())])
+    mats = []
+    for start, width, book, out in parts:
+        ids = sorted(book)
+        S = np.array([book[c][0] for c in ids], dtype=np.int64)  # (k, w)
+        nv = np.array([book[c][1] for c in ids], dtype=np.int64)  # (k,)
+        mats.append(
+            (
+                out,
+                slice(start, None if width is None else start + width),
+                np.array(ids, dtype=np.int32),
+                S,
+                nv,
+                nv * nv,  # int64 n² for the exact integer term
+                (nv * nv).astype(np.float64),  # divisor, exact below 2^53
+                (S * S).sum(axis=1),  # (k,) Σs²
+            )
+        )
+    schema = T.StructType(
+        df.schema.fields + [T.StructField(p[3], T.IntegerType()) for p in parts]
+    )
 
     def gen(batches):
         for pdf in batches:
             if not len(pdf):
-                pdf[field] = np.array([], dtype=np.int32)
+                for out, *_ in mats:
+                    pdf[out] = np.array([], dtype=np.int32)
                 yield pdf
                 continue
             X = np.stack(pdf[col].to_numpy()).astype(np.int64)  # (b, d)
-            xx = (X * X).sum(axis=1)  # (b,) Σx²
-            cross = X @ S.T  # (b, k) Σx·s — integer matmul, exact
-            d_int = nn * xx[:, None] - 2 * nv * cross + ss  # (b, k)
-            dval = d_int.astype(np.float64) / n2
-            pdf[field] = id_arr[np.argmin(dval, axis=1)]
+            for out, sl, ids, S, nv, nn, n2, ss in mats:
+                Xp = X[:, sl]  # (b, w) view
+                xx = (Xp * Xp).sum(axis=1)  # (b,) Σx²
+                cross = Xp @ S.T  # (b, k) Σx·s — integer matmul, exact
+                d_int = nn * xx[:, None] - 2 * nv * cross + ss  # (b, k)
+                pdf[out] = ids[np.argmin(d_int.astype(np.float64) / n2, axis=1)]
             yield pdf
 
     return df.mapInPandas(gen, schema)
@@ -317,25 +344,28 @@ def _gemm_envelope_ok(
     return True
 
 
-def _assign_cluster(
+def _assign(
     df: DataFrame,
-    cents: dict[int, tuple[list[int], int]],
+    parts: list[Part],
     n_rows: int,
-    x_bound: int | None = None,
-    field: str = "cluster",
+    x_bound: int | None,
     col: str = "qvec",
 ) -> DataFrame:
-    """Route the argmin assignment through the expression or the GEMM
-    kernel by work volume (``GEMM_ASSIGN_MIN_WORK``); results are
-    bit-identical either way. The GEMM path additionally requires the
-    driver-side int64 envelope check to pass (``_gemm_envelope_ok``) —
-    outside it the expanded intermediates could wrap silently, so the
-    router keeps the accumulator-form expression plan instead."""
-    if n_rows * len(cents) >= GEMM_ASSIGN_MIN_WORK and _gemm_envelope_ok(
-        cents, x_bound
+    """Attach one argmin column per part over ``col`` — the one router
+    every argmin site goes through (Lloyd rounds, PQ fit rounds, PQ
+    encode, the IVF-PQ candidate index). The GEMM kernel takes the call
+    when the work volume n_rows × Σ k_part reaches
+    ``GEMM_ASSIGN_MIN_WORK`` AND every codebook passes the int64 envelope
+    check (outside it the expanded intermediates could wrap silently);
+    otherwise each part becomes an ``_int_assign_expr`` column. Results
+    are bit-identical either way."""
+    if n_rows * sum(len(p[2]) for p in parts) >= GEMM_ASSIGN_MIN_WORK and all(
+        _gemm_envelope_ok(p[2], x_bound) for p in parts
     ):
-        return _gemm_assign(df, cents, field=field, col=col)
-    return df.withColumn(field, _int_assign_expr(cents, field=field, col=col))
+        return _gemm_argmin(df, parts, col)
+    for start, width, book, out in parts:
+        df = df.withColumn(out, _int_assign_expr(book, _part_sql(col, start, width)))
+    return df
 
 
 # Memoized Lloyd "models": the centroid matrices are deterministic given
@@ -347,41 +377,56 @@ _KMEANS_MODEL_CACHE: dict[tuple, tuple] = {}
 _KMEANS_CACHE_LOCK = __import__("threading").Lock()
 
 
-def _gate_kmeans(
+def _kmeans_fit(
     spark: SparkSession, sf_dir: str, k: int = KMEANS_GATE_K,
     n_iter: int = KMEANS_GATE_ITERS,
-) -> tuple[DataFrame, dict[int, tuple[list[int], int]]]:
-    """Run the integer-exact Lloyd rounds; return (embeddings frame with a
-    final map-only ``cluster`` column, final-assignment centroids).
+) -> tuple[dict, dict, int]:
+    """Run the integer-exact Lloyd rounds; return the memoized model
+    (assignment centroids, final-assignment centroids, corpus |x| bound).
 
     During fitting the quantized frame persists across the rounds: every
     iteration's centroid collect re-reads it, and without the cache each
     of the n_iter+1 jobs would redo the scan + spread shuffle +
-    quantization. It is unpersisted before returning — the final frame
-    re-derives the cluster column from the (cheap) scan, keeping no
-    storage pinned."""
+    quantization. It is unpersisted before returning, keeping no storage
+    pinned."""
     key = (spark.sparkContext.applicationId, sf_dir, k, n_iter)
     with _KMEANS_CACHE_LOCK:
         hit = _KMEANS_MODEL_CACHE.get(key)
-    emb = _quantized(spark, sf_dir)
-    n = _n_valid(spark, sf_dir)
     if hit is not None:
-        cents, final_cents, x_bound = hit
-        return _assign_cluster(emb, cents, n, x_bound), final_cents
-    cached = emb.persist()
+        return hit
+    n = _n_valid(spark, sf_dir)
+    cached = _quantized(spark, sf_dir).persist()
     try:
         assigned = cached.withColumn(
             "cluster", (F.col("vec_id") % k).cast("int")
         )
         for _ in range(n_iter):
             cents, x_bound = _int_centroids(assigned)
-            assigned = _assign_cluster(cached, cents, n, x_bound)
+            assigned = _assign(cached, [(0, None, cents, "cluster")], n, x_bound)
         final_cents, _ = _int_centroids(assigned)
     finally:
         cached.unpersist()
+    model = (cents, final_cents, x_bound)
     with _KMEANS_CACHE_LOCK:
-        _KMEANS_MODEL_CACHE[key] = (cents, final_cents, x_bound)
-    return _assign_cluster(emb, cents, n, x_bound), final_cents
+        _KMEANS_MODEL_CACHE[key] = model
+    return model
+
+
+def _gate_kmeans(
+    spark: SparkSession, sf_dir: str, k: int = KMEANS_GATE_K,
+    n_iter: int = KMEANS_GATE_ITERS,
+) -> tuple[DataFrame, dict[int, tuple[list[int], int]]]:
+    """(embeddings frame with a final map-only ``cluster`` column,
+    final-assignment centroids) — the fitted model applied to the (cheap)
+    re-derived scan."""
+    cents, final_cents, x_bound = _kmeans_fit(spark, sf_dir, k, n_iter)
+    assigned = _assign(
+        _quantized(spark, sf_dir),
+        [(0, None, cents, "cluster")],
+        _n_valid(spark, sf_dir),
+        x_bound,
+    )
+    return assigned, final_cents
 
 
 def kmeans_cells_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -441,6 +486,16 @@ def _oracle_round(r: int, prefix: str = "") -> str:
 # --- IVF over learned cells (the composition ann_ivf_topk defers to) ------
 
 
+def _probe_cells_expr(cents: dict[int, tuple[list[int], int]], col: str):
+    """Per query, the IVF_KM_N_PROBE cells with smallest exact L2 to the
+    rational centroid (ties to the lowest id) — a map-only sorted-literal
+    expression over ``col``."""
+    return F.expr(
+        f"transform(slice(array_sort(array({_dist_structs(cents, 'cell', col)})), "
+        f"1, {IVF_KM_N_PROBE}), s -> s.cell)"
+    )
+
+
 def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN whose coarse cells come from the gated integer-exact k-means
     (not pre-existing labels): probe the IVF_KM_N_PROBE nearest cells by
@@ -465,19 +520,8 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") % IVF_KM_QUERY_STRIDE == 0)
         & (F.col("vec_id") < QUERY_ID_CAP)
     ).select(F.col("vec_id").alias("query_id"), "qvec")
-    # probe: per query, the N_PROBE cells with smallest exact L2 to the
-    # rational centroid — a map-only sorted-literal expression, built as
-    # one SQL string for the same py4j-batching reason as _int_assign_expr
-    structs = ", ".join(
-        f"named_struct('d', {_dist_sql(*cents[c])}, 'cell', {int(c)})"
-        for c in sorted(cents)
-    )
-    probed_cells = F.expr(
-        f"transform(slice(array_sort(array({structs})), 1, {IVF_KM_N_PROBE}), "
-        f"s -> s.cell)"
-    )
     probed = queries.select(
-        "query_id", F.explode(probed_cells).alias("cell")
+        "query_id", F.explode(_probe_cells_expr(cents, "qvec")).alias("cell")
     )
 
     qf = full.filter(
@@ -602,45 +646,43 @@ PQ_K = 8  # codes per subspace
 PQ_ITERS = 2
 PQ_DIM = 64  # embeddings fixture dimension; subspace width = PQ_DIM // PQ_M
 
-_PQ_MODEL_CACHE: dict[tuple, list] = {}
-# Per-fit global |x| bound over the quantized components (round 13):
-# collected inside the SAME lock-step fitting aggregate (zero extra jobs)
-# and keyed like the model cache; feeds the GEMM envelope check for the
-# fused code-assignment kernel. None (pre-round-13 fits absent from the
-# cache never happen — both caches fill together) fails the envelope and
-# keeps the expression path, which is always safe.
-_PQ_XBOUND_CACHE: dict[tuple, int] = {}
+# (applicationId, sf_dir, M, k, iters) -> (codebooks, corpus |x| bound),
+# the _KMEANS_MODEL_CACHE contract.
+_PQ_MODEL_CACHE: dict[tuple, tuple] = {}
 
 
-def _pq_fit(spark: SparkSession, sf_dir: str) -> list[dict[int, tuple[list[int], int]]]:
-    """Per-subspace exact-rational codebooks, memoized per session (the
-    fitted-model contract, as for the k-means cache)."""
+def _pq_parts(books: list[dict[int, tuple[list[int], int]]]) -> list[Part]:
+    """The M subspace argmin parts over qvec: slice m against codebook m,
+    written to ``code_m``."""
+    width = PQ_DIM // PQ_M
+    return [(m * width, width, bk, f"code_{m}") for m, bk in enumerate(books)]
+
+
+def _pq_fit(
+    spark: SparkSession, sf_dir: str
+) -> tuple[list[dict[int, tuple[list[int], int]]], int]:
+    """Per-subspace exact-rational codebooks plus the corpus |x| bound,
+    memoized per session (the fitted-model contract, as for k-means)."""
     key = (spark.sparkContext.applicationId, sf_dir, PQ_M, PQ_K, PQ_ITERS)
     with _KMEANS_CACHE_LOCK:
         hit = _PQ_MODEL_CACHE.get(key)
     if hit is not None:
         return hit
     width = PQ_DIM // PQ_M
+    n = _n_valid(spark, sf_dir)
     # All M subspaces fit in lock-step: every Lloyd iteration is ONE
     # shuffle job keyed on (m, cluster, pos) instead of M sequential
     # per-subspace jobs (round-9: cut the cold fit from 2·M driver-
     # synchronized collects to PQ_ITERS — the per-round stats of
     # independent subspaces commute, so fusing them changes nothing
     # about the per-subspace rational centroids or assignments).
-    subs = _quantized(spark, sf_dir).select(
-        "vec_id",
-        *[
-            F.slice("qvec", m * width + 1, width).alias(f"q{m}")
-            for m in range(PQ_M)
-        ],
-    ).persist()
+    subs = _quantized(spark, sf_dir).select("vec_id", "qvec").persist()
     try:
-        qcols = [f"q{m}" for m in range(PQ_M)]
         assigned = subs.select(
             "vec_id",
-            *qcols,
+            "qvec",
             *[
-                (F.col("vec_id") % PQ_K).cast("int").alias(f"c{m}")
+                (F.col("vec_id") % PQ_K).cast("int").alias(f"code_{m}")
                 for m in range(PQ_M)
             ],
         )
@@ -654,8 +696,10 @@ def _pq_fit(spark: SparkSession, sf_dir: str) -> list[dict[int, tuple[list[int],
                             *[
                                 F.struct(
                                     F.lit(m).alias("m"),
-                                    F.col(f"c{m}").alias("cluster"),
-                                    F.col(f"q{m}").alias("sub"),
+                                    F.col(f"code_{m}").alias("cluster"),
+                                    F.slice("qvec", m * width + 1, width).alias(
+                                        "sub"
+                                    ),
                                 )
                                 for m in range(PQ_M)
                             ]
@@ -667,9 +711,9 @@ def _pq_fit(spark: SparkSession, sf_dir: str) -> list[dict[int, tuple[list[int],
                 .agg(
                     F.sum("x").alias("s"),
                     F.count("*").alias("n"),
-                    # global component bound for the GEMM envelope (round
-                    # 13) — every round aggregates every valid row, so any
-                    # round's max is the corpus max; rides the same job
+                    # global component bound for the GEMM envelope — every
+                    # round aggregates every valid row, so any round's max
+                    # is the corpus max; rides the same job
                     F.max(F.abs(F.col("x"))).alias("mx"),
                 )
                 .collect()
@@ -688,136 +732,28 @@ def _pq_fit(spark: SparkSession, sf_dir: str) -> list[dict[int, tuple[list[int],
                 }
                 for m in range(PQ_M)
             ]
-            assigned = subs.select(
-                "vec_id",
-                *qcols,
-                *[
-                    _int_assign_expr(books[m], col=f"q{m}").alias(f"c{m}")
-                    for m in range(PQ_M)
-                ],
-            )
+            assigned = _assign(subs, _pq_parts(books), n, x_bound)
     finally:
         subs.unpersist()
+    model = (books, x_bound)
     with _KMEANS_CACHE_LOCK:
-        _PQ_MODEL_CACHE[key] = books
-        _PQ_XBOUND_CACHE[key] = x_bound
-    return books
-
-
-def _pq_xbound(spark: SparkSession, sf_dir: str) -> int | None:
-    """The fit's corpus-wide |x| bound (None if this session never ran
-    the fit — callers go through _pq_fit first, so it is always set)."""
-    key = (spark.sparkContext.applicationId, sf_dir, PQ_M, PQ_K, PQ_ITERS)
-    with _KMEANS_CACHE_LOCK:
-        return _PQ_XBOUND_CACHE.get(key)
-
-
-def _gemm_assign_codes(
-    df: DataFrame,
-    books: list[dict[int, tuple[list[int], int]]],
-    col: str = "qvec",
-) -> DataFrame:
-    """Fused Arrow twin of the M per-subspace ``_int_assign_expr`` code
-    assignments (round 13, guide §4.1/§4.2): ONE ``mapInPandas`` pass
-    computes all ``code_0..code_{M-1}`` — one Python boundary for the
-    whole encode instead of M interpreted ``aggregate``/``zip_with``
-    folds per row (higher-order functions run outside whole-stage
-    codegen). Same integer-exact algebraic expansion as ``_gemm_assign``
-    — Σ(n·x−s)² = n²Σx² − 2nΣxs + Σs² per subspace slice — the identical
-    CAST-to-double division and the identical lowest-code tie break, so
-    codes are BIT-IDENTICAL to the expression path (differential pinned
-    in tests/test_clustering.py). Callers pre-project to exactly the
-    columns the downstream needs: an opaque kernel defeats column
-    pruning, so nothing heavy may ride through it (guide §4.1)."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    width = PQ_DIM // PQ_M
-    mats = []
-    for bk in books:
-        ids = sorted(bk)
-        S = np.array([bk[c][0] for c in ids], dtype=np.int64)  # (k, w)
-        nv = np.array([bk[c][1] for c in ids], dtype=np.int64)  # (k,)
-        mats.append(
-            (
-                np.array(ids, dtype=np.int32),
-                S,
-                nv,
-                (S * S).sum(axis=1),  # Σs²
-                (nv * nv).astype(np.float64),  # divisor, exact < 2^53
-                nv * nv,  # int64 n² for the exact integer term
-            )
-        )
-    schema = T.StructType(
-        df.schema.fields
-        + [T.StructField(f"code_{m}", T.IntegerType()) for m in range(PQ_M)]
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                for m in range(PQ_M):
-                    pdf[f"code_{m}"] = np.array([], dtype=np.int32)
-                yield pdf
-                continue
-            X = np.stack(pdf[col].to_numpy()).astype(np.int64)  # (b, d)
-            for m, (ids, S, nv, ss, n2, nn) in enumerate(mats):
-                Xm = X[:, m * width:(m + 1) * width]  # (b, w) view
-                xx = (Xm * Xm).sum(axis=1)  # (b,)
-                cross = Xm @ S.T  # (b, k) integer matmul, exact
-                d_int = nn * xx[:, None] - 2 * nv * cross + ss
-                dval = d_int.astype(np.float64) / n2
-                pdf[f"code_{m}"] = ids[np.argmin(dval, axis=1)]
-            yield pdf
-
-    return df.mapInPandas(gen, schema)
-
-
-def _assign_pq_codes(
-    spark: SparkSession,
-    sf_dir: str,
-    df: DataFrame,
-    books: list[dict[int, tuple[list[int], int]]],
-    col: str = "qvec",
-) -> DataFrame:
-    """Route the M-subspace PQ encode through the expression path or the
-    fused GEMM kernel by work volume — the ``_assign_cluster`` contract
-    extended to codes (round 13; the last always-interpreted argmin on a
-    corpus-sized path). Work = n_rows × PQ_K × PQ_M candidate distances;
-    below GEMM_ASSIGN_MIN_WORK the expression path wins (no Python
-    worker round-trip, full pruning — every gated tier ≤ sf0.1 stays on
-    it, so gate plans are unchanged), above it the kernel takes over
-    IF every subspace codebook passes the int64 envelope check
-    (``_gemm_envelope_ok`` with the fit's own corpus |x| bound)."""
-    n = _n_valid(spark, sf_dir)
-    xb = _pq_xbound(spark, sf_dir)
-    if n * PQ_K * PQ_M >= GEMM_ASSIGN_MIN_WORK and all(
-        _gemm_envelope_ok(bk, xb) for bk in books
-    ):
-        return _gemm_assign_codes(df, books, col=col)
-    width = PQ_DIM // PQ_M
-    out = df
-    for m, bk in enumerate(books):
-        out = out.withColumn(
-            f"_sub{m}", F.slice(col, m * width + 1, width)
-        ).withColumn(
-            f"code_{m}", _int_assign_expr(bk, field="code", col=f"_sub{m}")
-        )
-    return out
+        _PQ_MODEL_CACHE[key] = model
+    return model
 
 
 def pq_codes_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gated PQ encoding: per vector, the M argmin codes against the
     per-subspace codebooks — a single map-only pass once the codebooks
-    are fitted (they enter as literals, like Spark ML model application).
-    Round 13: the encode routes through ``_assign_pq_codes`` — the fused
-    GEMM kernel above the work threshold (one Arrow boundary for all M
-    codes instead of M interpreted folds per corpus row), the identical
-    expression plan below it (every gated tier)."""
-    books = _pq_fit(spark, sf_dir)
-    emb = _quantized(spark, sf_dir)
-    out = _assign_pq_codes(
-        spark, sf_dir, emb.select("vec_id", "qvec"), books
+    are fitted (they enter as literals, like Spark ML model application),
+    routed like every argmin here (``_assign``): one Arrow boundary for
+    all M codes above the work threshold, the expression plan below it
+    (every gated tier)."""
+    books, x_bound = _pq_fit(spark, sf_dir)
+    out = _assign(
+        _quantized(spark, sf_dir).select("vec_id", "qvec"),
+        _pq_parts(books),
+        _n_valid(spark, sf_dir),
+        x_bound,
     )
     return out.select(
         "vec_id", *[F.col(f"code_{m}") for m in range(PQ_M)]
@@ -895,33 +831,15 @@ def pq_adc_topk(
     index is lossy vs exact search, but every quantity on its decision
     path is integer-exact or fixed-order IEEE, so the twin reproduces the
     identical shortlist and rerank bit-for-bit."""
-    books = _pq_fit(spark, sf_dir)
-    width = PQ_DIM // PQ_M
+    books, _ = _pq_fit(spark, sf_dir)
     codes = pq_codes_query(spark, sf_dir)
     emb = _quantized(spark, sf_dir)
-    queries = emb.filter(
-        (F.col("vec_id") % stride == 0) & (F.col("vec_id") < QUERY_ID_CAP)
-    ).select(
-        F.col("vec_id").alias("query_id"), F.col("qvec").alias("q_qvec")
+    queries = _adc_tables(
+        emb.filter(
+            (F.col("vec_id") % stride == 0) & (F.col("vec_id") < QUERY_ID_CAP)
+        ).select(F.col("vec_id").alias("query_id"), F.col("qvec").alias("q_qvec")),
+        books,
     )
-    for m, cents in enumerate(books):
-        queries = queries.withColumn(
-            f"_q{m}", F.slice("q_qvec", m * width + 1, width)
-        )
-        # per-query literal distance table, indexed BY CLUSTER ID (slot
-        # c+1 = centroid c): codes are cluster ids, and a cluster that
-        # emptied during fitting must keep its slot (as +inf — no code
-        # can reference it, but positional compaction would silently
-        # shift every later lookup).
-        tbl = F.array(
-            *[
-                F.expr(_dist_sql(*cents[c], col=f"_q{m}"))
-                if c in cents
-                else F.lit(float("inf"))
-                for c in range(PQ_K)
-            ]
-        )
-        queries = queries.withColumn(f"_dt{m}", tbl)
     pairs = F.broadcast(
         queries.select(
             "query_id", "q_qvec", *[F.col(f"_dt{m}") for m in range(PQ_M)]
@@ -929,6 +847,47 @@ def pq_adc_topk(
     ).crossJoin(codes.withColumnRenamed("vec_id", "neighbor_id")).filter(
         F.col("neighbor_id") != F.col("query_id")
     )
+    return _adc_rerank(pairs, emb, shortlist, top_k).select(
+        "query_id", "rank", "neighbor_id", "exact_dist", "adc_dist"
+    )
+
+
+def _adc_tables(
+    queries: DataFrame, books: list[dict[int, tuple[list[int], int]]]
+) -> DataFrame:
+    """Attach the per-query literal ADC distance tables ``_dt0..`` over
+    ``q_qvec``, indexed BY CLUSTER ID (slot c+1 = centroid c): codes are
+    cluster ids, and a cluster that emptied during fitting must keep its
+    slot (as +inf — no code can reference it, but positional compaction
+    would silently shift every later lookup)."""
+    for m, (start, width, bk, _) in enumerate(_pq_parts(books)):
+        queries = queries.withColumn(
+            f"_dt{m}",
+            F.array(
+                *[
+                    F.expr(_dist_sql(*bk[c], col=_part_sql("q_qvec", start, width)))
+                    if c in bk
+                    else F.lit(float("inf"))
+                    for c in range(PQ_K)
+                ]
+            ),
+        )
+    return queries
+
+
+def _adc_rerank(
+    pairs: DataFrame,
+    emb: DataFrame,
+    shortlist: int,
+    top_k: int,
+    extra: tuple[str, ...] = (),
+) -> DataFrame:
+    """Two-stage search over (query, candidate) ``pairs`` carrying the
+    query's ``q_qvec`` and ``_dt*`` tables and the candidate's codes: keep
+    the ``shortlist`` best ADC distances per query (Σ_m table_m[code_m],
+    summed in the literal order ((t0+t1)+t2)+t3 the twins use), then rank
+    those by exact quantized L2 against ``emb`` and keep ``rank <= top_k``.
+    ``extra`` columns ride along from the pairs."""
     adc = None
     for m in range(PQ_M):
         term = F.element_at(F.col(f"_dt{m}"), F.col(f"code_{m}") + 1)
@@ -940,9 +899,8 @@ def pq_adc_topk(
         pairs.withColumn("adc_dist", adc)
         .withColumn("_adc_rank", F.row_number().over(w_adc))
         .filter(F.col("_adc_rank") <= shortlist)
-        .select("query_id", "q_qvec", "neighbor_id", "adc_dist")
+        .select("query_id", "q_qvec", "neighbor_id", *extra, "adc_dist")
     )
-    # stage 2: exact quantized-L2 on the shortlist only
     reranked = short.join(
         emb.select(
             F.col("vec_id").alias("neighbor_id"),
@@ -952,9 +910,7 @@ def pq_adc_topk(
     ).withColumn(
         "exact_dist",
         F.aggregate(
-            F.zip_with(
-                "q_qvec", "n_qvec", lambda a, b: (a - b) * (a - b)
-            ),
+            F.zip_with("q_qvec", "n_qvec", lambda a, b: (a - b) * (a - b)),
             F.lit(0).cast("long"),
             lambda acc, x: acc + x,
         ),
@@ -965,7 +921,6 @@ def pq_adc_topk(
     return (
         reranked.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= top_k)
-        .select("query_id", "rank", "neighbor_id", "exact_dist", "adc_dist")
     )
 
 
@@ -1112,64 +1067,35 @@ def ivf_pq_topk(
     in tests/test_clustering.py. Every decision-path quantity is
     integer-exact or fixed-order IEEE (the pq_adc_topk argument), so the
     DuckDB twin reproduces shortlists and ranks bit-for-bit."""
-    assigned, cents = _gate_kmeans(spark, sf_dir)
-    books = _pq_fit(spark, sf_dir)
-    width = PQ_DIM // PQ_M
+    cents, final_cents, km_bound = _kmeans_fit(spark, sf_dir)
+    books, pq_bound = _pq_fit(spark, sf_dir)
+    emb = _quantized(spark, sf_dir)
 
-    # candidate index: IVF cell + M PQ codes, all map-only on one scan.
-    # Round 13: the code encode routes through _assign_pq_codes (fused
-    # GEMM kernel above the work threshold — see pq_codes_query); the
-    # pre-projection to (vec_id, cluster, qvec) keeps the kernel's
-    # opaque boundary from dragging the raw embedding column through
-    # Python (guide §4.1). At GEMM scale the cell assignment inside
-    # `assigned` is a kernel too — two boundaries total; fusing them
-    # would need _gate_kmeans to expose its pre-assignment frame, noted
-    # as future work, and the expression tiers (every gated sf) fuse
-    # into one codegen stage as before.
-    cand = _assign_pq_codes(
-        spark,
-        sf_dir,
-        assigned.select("vec_id", "cluster", "qvec"),
-        books,
-    )
-    cand = cand.select(
+    # candidate index: IVF cell + M PQ codes in ONE routed argmin call on
+    # one scan — a single Arrow boundary at GEMM scale, one codegen stage
+    # on the expression tiers. The pre-projection to (vec_id, qvec) keeps
+    # the kernel's opaque boundary from dragging the raw embedding column
+    # through Python. Both fits' bounds are the corpus max|x|.
+    cand = _assign(
+        emb.select("vec_id", "qvec"),
+        [(0, None, cents, "cluster"), *_pq_parts(books)],
+        _n_valid(spark, sf_dir),
+        max(km_bound, pq_bound),
+    ).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("cluster").alias("cell"),
         *[F.col(f"code_{m}") for m in range(PQ_M)],
     )
 
-    queries = _quantized(spark, sf_dir).filter(
+    # probe against the final-assignment centroids (the ann_ivf_kmeans
+    # contract), then the ADC tables
+    queries = emb.filter(
         (F.col("vec_id") % stride == 0) & (F.col("vec_id") < QUERY_ID_CAP)
     ).select(F.col("vec_id").alias("query_id"), F.col("qvec").alias("q_qvec"))
-    # probe: N_PROBE nearest cells by exact rational L2 to the final-
-    # assignment centroids (same contract as ann_ivf_kmeans's probe)
-    structs = ", ".join(
-        f"named_struct('d', {_dist_sql(*cents[c], col='q_qvec')}, "
-        f"'cell', {int(c)})"
-        for c in sorted(cents)
+    queries = _adc_tables(
+        queries.withColumn("_cells", _probe_cells_expr(final_cents, "q_qvec")),
+        books,
     )
-    probed_cells = F.expr(
-        f"transform(slice(array_sort(array({structs})), 1, "
-        f"{IVF_KM_N_PROBE}), s -> s.cell)"
-    )
-    queries = queries.withColumn("_cells", probed_cells)
-    # per-query ADC distance tables, indexed by cluster id (slot c+1 =
-    # centroid c; emptied clusters keep their slot as +inf — the
-    # pq_adc_topk layout contract)
-    for m, bk in enumerate(books):
-        queries = queries.withColumn(
-            f"_q{m}", F.slice("q_qvec", m * width + 1, width)
-        ).withColumn(
-            f"_dt{m}",
-            F.array(
-                *[
-                    F.expr(_dist_sql(*bk[c], col=f"_q{m}"))
-                    if c in bk
-                    else F.lit(float("inf"))
-                    for c in range(PQ_K)
-                ]
-            ),
-        )
     probed = queries.select(
         "query_id",
         "q_qvec",
@@ -1180,48 +1106,13 @@ def ivf_pq_topk(
     pairs = F.broadcast(probed).join(cand, "cell").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    adc = None
-    for m in range(PQ_M):
-        term = F.element_at(F.col(f"_dt{m}"), F.col(f"code_{m}") + 1)
-        adc = term if adc is None else adc + term
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    short = (
-        pairs.withColumn("adc_dist", adc)
-        .withColumn("_adc_rank", F.row_number().over(w_adc))
-        .filter(F.col("_adc_rank") <= shortlist)
-        .select("query_id", "q_qvec", "neighbor_id", "cell", "adc_dist")
-    )
-    # exact quantized-L2 rerank on the shortlist only
-    reranked = short.join(
-        _quantized(spark, sf_dir).select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("qvec").alias("n_qvec"),
-        ),
+    return _adc_rerank(pairs, emb, shortlist, top_k, extra=("cell",)).select(
+        "query_id",
+        F.col("rank").cast("long").alias("rank"),
         "neighbor_id",
-    ).withColumn(
+        "cell",
         "exact_dist",
-        F.aggregate(
-            F.zip_with("q_qvec", "n_qvec", lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("exact_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        reranked.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select(
-            "query_id",
-            F.col("rank").cast("long").alias("rank"),
-            "neighbor_id",
-            "cell",
-            "exact_dist",
-            "adc_dist",
-        )
+        "adc_dist",
     )
 
 
@@ -1381,18 +1272,13 @@ SEMDEDUP_SUB_BITS = 16
 # which semantic_dedup's within-cell pair scoring routes through the
 # grouped Arrow GEMM kernel instead of the interpreted zip_with/aggregate
 # fold expressions (round 13; the semantic-dedup analog of the
-# _assign_cluster / _assign_pq_codes routing contract — higher-order
+# ``_assign`` routing contract — higher-order
 # functions run outside whole-stage codegen, and the pair join evaluates
 # one 64-element fold per CANDIDATE PAIR, measured 6.37 s of the 6.42 s
 # sf1 warm path). Every gated tier stays under the threshold (sf0.1:
 # 2000 × 63 = 126k), so gate plans keep the expression shape with zero
 # Python nodes; the kernel takes over at sf1+ (12.5M/38.7M).
 SEMDEDUP_GEMM_MIN_WORK = 2_000_000
-# Env override for A/B measurement only: "1" forces the kernel on, "0"
-# forces the expression path, unset/"auto" routes by work volume.
-SEMDEDUP_GEMM_MODE = __import__("os").environ.get(
-    "SPARK_GRAFT_SEMDEDUP_GEMM", "auto"
-)
 
 
 def _spark_round6(y: float) -> float:
@@ -1459,7 +1345,7 @@ def _semdedup_pair_kernel(
     rank window, the pair-expansion join, and the groupBy all collapse
     into the one grouped-map exchange, which ships exactly the bytes the
     window exchange shipped before. Exactness contract (the
-    ``_gemm_assign`` discipline): integer dot/norms are exact int64 under
+    ``_gemm_argmin`` discipline): integer dot/norms are exact int64 under
     the Cauchy–Schwarz envelope max(nrm2) < 2^62 (checked per group;
     outside it the group falls back to exact object-dtype integers), the
     float chain is the identical correctly-rounded IEEE ops in the
@@ -1687,11 +1573,7 @@ def semantic_dedup(
     # Python worker round-trip, zero Python nodes — every gated tier).
     avg_cell = max(1, _n_valid(spark, sf_dir) // max(k, 1))
     partners = avg_cell if cell_cap is None else min(avg_cell, cell_cap)
-    use_kernel = SEMDEDUP_GEMM_MODE == "1" or (
-        SEMDEDUP_GEMM_MODE != "0"
-        and _n_valid(spark, sf_dir) * partners >= SEMDEDUP_GEMM_MIN_WORK
-    )
-    if use_kernel:
+    if _n_valid(spark, sf_dir) * partners >= SEMDEDUP_GEMM_MIN_WORK:
         dups = _semdedup_pair_kernel(
             paired.select("cluster", "sub", "vec_id", "qvec", "nrm2"),
             tau,

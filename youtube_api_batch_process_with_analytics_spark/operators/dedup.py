@@ -926,39 +926,19 @@ ORDER BY vec_id_a, vec_id_b
 
 # Min-label propagation converges in ≤ graph-diameter rounds; near-dup
 # clusters are shallow, so 50 is a generous safety bound, not a tuning knob.
-# (With CC_HOPS_PER_CHECK > 1 the bound is counted in convergence CHECKS,
-# i.e. the hop budget is 50 × hops — still a pathology guard, not tuning.)
+# One hop per convergence check is pinned by measurement (commit c1aeb8d,
+# OPTIMIZATION_r13.md): the LSH pair graph converges in 2 hops at every
+# tier, so folding H hops into one check only bought no-op joins past the
+# fixpoint (H=2: 2.56->3.22 s at sf0.1, 5.24->7.55 s at sf1), and pointer
+# doubling added one shuffle join per hop (2.56->11.4 s at sf0.1). CC
+# wall-clock is the upstream pair computation + fixed materializations,
+# not iteration count.
 CC_MAX_ITERATIONS = 50
-# Propagation hops folded into each convergence check (H hops share one
-# persist-filling count job; detection stays exact because labels are
-# monotone non-increasing per hop, so "nothing moved across the whole
-# H-hop check" implies hop 1 alone moved nothing — a true hop-fixpoint,
-# labels invariant to H). Default 1 = classic check-every-hop, PINNED BY
-# MEASUREMENT (round-13, tools/ab_cc_rounds.py): the LSH pair graph
-# converges in 2 hops at every tier (sf0.1 and sf1, labels md5-identical
-# across modes), so folding only buys no-op joins past the fixpoint —
-# H=2 measured 2.56->3.22 s at sf0.1 and 5.24->7.55 s at sf1, H=3
-# 6.09 s. The round-12 "halve the rounds" hypothesis (verdict item 8) is
-# measured FALSE: there are only 2 rounds to begin with; CC wall-clock
-# is the upstream pair computation + fixed materializations, not
-# iteration count. Env override is for A/B measurement only.
-CC_HOPS_PER_CHECK = int(__import__("os").environ.get("SPARK_GRAFT_CC_HOPS", "1"))
-# Pointer doubling: after each neighbor-min hop, additionally chase one
-# level of the label map (label <- label(label)) — a self-join of the
-# iterate (every label is a vertex id), fixpoint unchanged. The standard
-# trick for halving rounds on CHAINY graphs; on this 2-hop-deep graph it
-# is pure overhead (one extra shuffle join per hop: 2.56->11.4 s at
-# sf0.1, measured round 13), so it stays off. Env override is for A/B
-# measurement only; the long-chain fixture in tests/test_scale_plans.py
-# is where it would ever matter, and even there convergence is pinned.
-CC_POINTER_DOUBLING = (
-    __import__("os").environ.get("SPARK_GRAFT_CC_DOUBLE", "0") == "1"
-)
-# Every this-many checked rounds the iterate is localCheckpoint'ed so
-# the plan a long chain builds stays bounded (persist truncates execution
-# but not lineage, and each hop doubles the plan — the iterate is
-# referenced twice per hop, 3× with doubling — so the interval caps the
-# blow-up at (2·hops)^interval copies of a checkpointed leaf).
+# Every this-many rounds the iterate is localCheckpoint'ed so the plan a
+# long chain builds stays bounded (persist truncates execution but not
+# lineage, and each round doubles the plan — the iterate is referenced
+# twice per round — so the interval caps the blow-up at 2^interval copies
+# of a checkpointed leaf).
 CC_CHECKPOINT_INTERVAL = 5
 # Diagnostics: propagation rounds of the most recent invocation (tests use
 # this to prove a long-chain graph actually exercised the checkpoint path).
@@ -1045,55 +1025,32 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = cached
     global CC_LAST_ROUNDS
     CC_LAST_ROUNDS = 0
-    for _check in range(CC_MAX_ITERATIONS):
-        # H hops per checked job (see CC_HOPS_PER_CHECK): carry the label
-        # at check start so "moved" can be derived at the end without a
-        # second comp-vs-new join — labels only ever decrease, so
-        # final < start is exactly "anything moved this check".
-        cur = comp.select(
-            "doc_id",
-            "component_id",
-            F.col("component_id").alias("check_start"),
+    for _round in range(CC_MAX_ITERATIONS):
+        CC_LAST_ROUNDS = _round + 1
+        nbr_min = (
+            edges.join(comp, edges.src == comp.doc_id)
+            .groupBy(F.col("dst").alias("doc_id"))
+            .agg(F.min("component_id").alias("nbr_min"))
         )
-        for _hop in range(CC_HOPS_PER_CHECK):
-            CC_LAST_ROUNDS += 1
-            nbr_min = (
-                edges.join(cur, edges.src == cur.doc_id)
-                .groupBy(F.col("dst").alias("doc_id"))
-                .agg(F.min("component_id").alias("nbr_min"))
-            )
-            cur = cur.join(nbr_min, "doc_id", "left").select(
-                "doc_id",
-                F.least(
-                    F.col("component_id"),
-                    F.coalesce(F.col("nbr_min"), F.col("component_id")),
-                ).alias("component_id"),
-                "check_start",
-            )
-            if CC_POINTER_DOUBLING:
-                # label <- label(label): every label is a vertex id of the
-                # pair graph, so the chase is a self-join on the iterate.
-                labels = cur.select(
-                    F.col("doc_id").alias("m_id"),
-                    F.col("component_id").alias("m_label"),
-                )
-                cur = cur.join(
-                    labels, cur.component_id == labels.m_id, "left"
-                ).select(
-                    "doc_id",
-                    F.coalesce("m_label", "component_id").alias("component_id"),
-                    "check_start",
-                )
+        # Carry the did-anything-move flag inside the propagation join
+        # itself: one keyed join + one flag scan per round, instead of a
+        # second comp-vs-new_comp join just to detect convergence.
         # `cached` is the persisted handle (comp is a projection over it,
         # so unpersist must target `cached`, not comp).
-        stepped = cur.select(
+        stepped = comp.join(nbr_min, "doc_id", "left").select(
             "doc_id",
-            "component_id",
-            (F.col("component_id") < F.col("check_start")).alias("moved"),
+            F.least(
+                F.col("component_id"),
+                F.coalesce(F.col("nbr_min"), F.col("component_id")),
+            ).alias("component_id"),
+            (
+                F.coalesce(F.col("nbr_min"), F.col("component_id"))
+                < F.col("component_id")
+            ).alias("moved"),
         )
-        # localCheckpoint (implicitly persisted) every K checked rounds
-        # truncates the stacked-join lineage; plain persist in between.
-        if (_check + 1) % CC_CHECKPOINT_INTERVAL == 0:
+        # localCheckpoint (implicitly persisted) every K rounds truncates
+        # the stacked-join lineage; plain persist in between.
+        if (_round + 1) % CC_CHECKPOINT_INTERVAL == 0:
             stepped = stepped.localCheckpoint(eager=False)
         else:
             stepped = stepped.persist()
@@ -1106,8 +1063,7 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     else:
         raise RuntimeError(
             f"connected components did not converge in {CC_MAX_ITERATIONS} "
-            f"checked rounds ({CC_LAST_ROUNDS} propagation hops) — "
-            "pathological chain in the near-dup pair graph; raise "
+            "rounds — pathological chain in the near-dup pair graph; raise "
             "CC_MAX_ITERATIONS or switch to large-star/small-star"
         )
     # The `changed` count materialized the final comp, so edges' cache is no
@@ -1244,7 +1200,7 @@ def benchmark_contamination(
     # keep side becomes a MAP-ONLY anti-join: the corpus posting list no
     # longer shuffles for the guard. Retention unchanged: drop shingles
     # whose global corpus df exceeds the cap. Round-11 A/B on this shape
-    # (tools/ab_contamination.py, sf3, one session, warm guard stage):
+    # (commit b72fa39, sf3, one session, warm guard stage):
     # window 3.27s / agg 3.24s / bench-semi-prefilter 3.80s — fixture-
     # tier timing is neutral (the df agg and the window shuffle the same
     # 7.8M postings; the win is the structural skew/sort story), and the
