@@ -120,7 +120,7 @@ def test_watermarked_level_counts(spark, event_stream):
 
 
 def test_quota_latch_stream(spark, event_stream):
-    """The applyInPandasWithState latch: final per-key totals must match the
+    """The streaming-aggregate latch: final per-key totals must match the
     batch groupBy, and is_exhausted must latch exactly when requests >= quota."""
     from youtube_api_batch_process_with_analytics_spark.streaming import quota_latch_stream
 
@@ -161,6 +161,117 @@ def test_quota_latch_stream(spark, event_stream):
         assert 0 < n_exhausted  # fixture actually exercises the latch
     finally:
         q.stop()
+
+
+def test_quota_latch_stream_plan_is_jvm_aggregate(spark, tmp_path):
+    """The latch runs as a JVM streaming aggregate: the executed plan keeps
+    its state in StateStoreRestore/StateStoreSave and has no Python state
+    operator (FlatMapGroupsInPandasWithState) on the path."""
+    import pandas as pd
+
+    from youtube_api_batch_process_with_analytics_spark.streaming.state import (
+        quota_latch_stream,
+    )
+
+    src = tmp_path / "latch_plan_events"
+    src.mkdir()
+    pd.DataFrame({"user_id": [1, 1, 2], "event_type": ["view", "error", "view"]}).to_parquet(
+        src / "f0.parquet", index=False
+    )
+    stream = spark.readStream.schema("user_id long, event_type string").parquet(str(src))
+    q = (
+        quota_latch_stream(stream, quota=2)
+        .writeStream.format("memory")
+        .queryName("latch_plan")
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(120), "availableNow run did not terminate"
+        plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    finally:
+        q.stop()
+    assert "FlatMapGroupsInPandasWithState" not in plan, plan
+    assert "StateStoreSave" in plan, plan
+
+
+def test_quota_latch_stream_update_mode_across_batches(spark, tmp_path):
+    """Update-mode contract over several micro-batches (one file each):
+    every batch emits exactly the keys it touched, NULL key included, each
+    with cumulative totals; is_exhausted first reads true in the batch
+    where the key's cumulative count reaches the quota. The counts and
+    the flag are typed non-nullable (COUNT is never NULL)."""
+    import os
+
+    import pandas as pd
+
+    from youtube_api_batch_process_with_analytics_spark.streaming.state import (
+        quota_latch_stream,
+    )
+
+    QUOTA = 3
+    files = [
+        [(1, "view"), (1, "error"), (2, "view")],
+        [(1, "view"), (None, "error"), (3, None)],  # u1 reaches 3 here
+        [(2, "error"), (2, "view"), (None, "view")],  # u2 reaches 3 here
+        [(1, "error"), (4, "view")],  # u1 stays latched
+    ]
+    src = tmp_path / "latch_multi_events"
+    src.mkdir()
+    for i, rows in enumerate(files):
+        path = src / f"f{i}.parquet"
+        pd.DataFrame(rows, columns=["user_id", "event_type"]).astype(
+            {"user_id": "Int64"}
+        ).to_parquet(path, index=False)
+        os.utime(path, (1_000_000 + i, 1_000_000 + i))  # source order = file order
+
+    batches: dict[int, list] = {}
+    schemas = []
+
+    def sink(df, epoch):
+        schemas.append(df.schema)
+        rows = [tuple(r) for r in df.collect()]
+        if rows:
+            batches[epoch] = rows
+
+    stream = (
+        spark.readStream.schema("user_id long, event_type string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    q = (
+        quota_latch_stream(stream, quota=QUOTA)
+        .writeStream.foreachBatch(sink)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(120), "availableNow run did not terminate"
+    finally:
+        q.stop()
+
+    assert len(batches) == len(files), sorted(batches)
+    totals: dict = {}
+    first_exhausted: dict = {}
+    for b, rows in enumerate(files):
+        for user, event in rows:
+            n, f = totals.get(user, (0, 0))
+            totals[user] = (n + 1, f + int(event == "error"))
+        want = {
+            u: (u, *totals[u], totals[u][0] >= QUOTA) for u in {u for u, _ in rows}
+        }
+        got = batches[sorted(batches)[b]]
+        assert len(got) == len(want), (b, got)
+        assert {r[0]: r for r in got} == want, (b, got)
+        for u, row in want.items():
+            if row[3]:
+                first_exhausted.setdefault(u, b)
+    assert first_exhausted == {1: 1, 2: 2}
+    for schema in schemas:
+        assert not schema["total_requests"].nullable
+        assert not schema["is_exhausted"].nullable
 
 
 def test_ttl_cache_stream(spark, tmp_path):
@@ -482,9 +593,9 @@ def test_rate_limit_pacer_stream_hostile_rows(spark, tmp_path):
 
 
 def test_quota_latch_checkpoint_recovery(spark, tmp_path):
-    """Exactly-once recovery of the Python state-store path: stop the
+    """Exactly-once recovery of the latch's state store: stop the
     latch query after run 1, deliver more events, restart from the SAME
-    checkpoint — per-key GroupState (counts AND the monotone latch input)
+    checkpoint — the per-key aggregate state (the counts the latch reads)
     must be restored, so run 2 emits CUMULATIVE totals and the latch
     flips only on the cross-restart cumulative count. A fresh-state
     restart would emit 2 requests for user 1 and never latch."""
@@ -630,10 +741,9 @@ def test_quota_latch_gate_single_microbatch(spark, sf_dir):
     """The gate wrapper's staged source must feed availableNow as ONE
     micro-batch (coalesced staging write, well under maxFilesPerTrigger):
     batch startup — not state work — would otherwise dominate the
-    wall-clock. Round-9 profile note: with one batch, the remaining cost
-    scales with KEY cardinality (one Python group call + one tiny Arrow
-    batch per key in applyInPandasWithState), which is the price of
-    driving the real streaming engine — the attestation contract."""
+    wall-clock. With one batch, the remaining cost is the streaming
+    aggregate's state-store commit, which is the price of driving the
+    real streaming engine — the attestation contract."""
     import uuid
 
     from youtube_api_batch_process_with_analytics_spark.sources import load_table
@@ -676,11 +786,10 @@ def test_quota_latch_gate_single_microbatch(spark, sf_dir):
         st._latch_src_release(src)
 
 
-def test_latch_gate_sizing_responds_to_data(spark, sf_dir):
-    """The round-10 latch sizing contract: the staged source exists once
-    per (session, corpus), its state-partition count derives from staged
-    bytes with the documented floor, and the gate result is unchanged by
-    the sizing (the driver row pins values; this pins the mechanism)."""
+def test_latch_gate_source_staged_once_per_session(spark, sf_dir):
+    """The gate's staged source exists once per (session, corpus): it
+    holds the corpus's rows, and a second acquire returns the SAME staged
+    dir (session memo) instead of re-writing the input."""
     import os
 
     from youtube_api_batch_process_with_analytics_spark.sources import load_table
@@ -698,19 +807,6 @@ def test_latch_gate_sizing_responds_to_data(spark, sf_dir):
             if f.endswith(".parquet")
         )
         assert staged_bytes > 0
-        n_parts = max(
-            8,
-            min(
-                spark.sparkContext.defaultParallelism,
-                staged_bytes // 65_536,
-            ),
-        )
-        # the small fixture must sit at the floor; a corpus big enough to
-        # exceed it must scale (checked arithmetically, not by staging
-        # 10x data in a unit test)
-        assert n_parts >= 8
-        assert max(8, min(64, (100 * staged_bytes) // 65_536)) >= n_parts
-        # second acquire returns the SAME staged dir (session memo)
         src2 = _latch_src_acquire(spark, sf_dir, events)
         try:
             assert src2 == src

@@ -154,10 +154,10 @@ def test_hostile_quota_usage_stream(spark, hostile_events):
 
 
 def test_hostile_quota_latch_stream(spark, hostile_events):
-    """The applyInPandasWithState exhaustion latch under NULL keys: a NULL
-    user_id is its own state group (previously the non-nullable output
-    schema crashed the whole query on the first NULL-keyed row), and every
-    clean key's totals match the batch groupBy over the poisoned frame."""
+    """The streaming-aggregate exhaustion latch under NULL keys: a NULL
+    user_id is its own state group (one NULL-keyed event must not kill
+    the whole query), and every clean key's totals match the batch
+    groupBy over the poisoned frame."""
     from youtube_api_batch_process_with_analytics_spark.streaming import (
         quota_latch_stream,
     )

@@ -1,16 +1,18 @@
-"""Custom stateful streaming operators (SURVEY.md §2.9 ST1/ST2).
-
-Two pieces of reference state don't reduce to a windowed aggregate:
+"""Custom stateful streaming operators (SURVEY.md §2.9 ST1-ST3).
 
 - the per-key **exhaustion latch** (``APIKeyStats.is_exhausted``,
   youtube_api_handler.py:55,61): once a key crosses its quota it stays
-  exhausted until explicitly reset — a monotone flag over arbitrary many
-  micro-batches, i.e. true user-defined state.
+  exhausted. With no reset and a request count that only grows, the
+  latch is a function of the cumulative count, so it runs as a plain
+  JVM streaming aggregate (``quota_latch_stream``).
 - the **TTL cache** (youtube_api_handler.py:81-105): key→value entries
   that lazily expire; streaming form = state with a processing-time
   timeout.
+- the **min-interval pacer** (youtube_api_handler.py:361-367): one
+  last-admit stamp per key folded through each event in order.
 
-Both are implemented with ``applyInPandasWithState`` — Arrow-batched
+The cache and the pacer are true user-defined state (a timeout, an
+ordered fold), implemented with ``applyInPandasWithState`` — Arrow-batched
 grouped state, the idiomatic Spark shape for custom stateful operators.
 State is per-group and partitioned by the grouping key, so at production
 scale it shards across executors with the shuffle; each group's state is
@@ -122,83 +124,33 @@ register_releaser(_release_latch_sources)
 
 DAILY_QUOTA = 10_000  # config.py:15
 
-# Grouping keys are NULLABLE in both output schemas: Spark's groupBy makes
-# NULL a real key group, and a non-nullable StructField here turns the
-# first NULL-keyed row into an EXPRESSION_DECODING_FAILED that kills the
-# WHOLE streaming query — one poisoned event taking down the pipeline
-# (found by tests/test_streaming_hostile.py).
-LATCH_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("key_id", T.LongType(), True),
-        T.StructField("total_requests", T.LongType()),
-        T.StructField("total_failures", T.LongType()),
-        T.StructField("is_exhausted", T.BooleanType()),
-    ]
-)
-
-LATCH_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("requests", T.LongType()),
-        T.StructField("failures", T.LongType()),
-        T.StructField("exhausted", T.BooleanType()),
-    ]
-)
-
-
 def quota_latch_stream(events: DataFrame, quota: int = DAILY_QUOTA) -> DataFrame:
     """ST2's exhaustion latch: per-key running request/failure counts with a
     monotone ``is_exhausted`` flag that latches once ``requests >= quota``
-    (youtube_api_handler.py:47-79). Emits one updated row per key per
-    micro-batch.
+    (youtube_api_handler.py:47-79).
 
-    ``events`` needs (user_id LONG, event_type STRING). The latch is the
-    part a plain windowed aggregate can't express: it must survive window
-    boundaries until an operator reset — hence GroupState.
+    ``events`` needs (user_id LONG, event_type STRING). The reference has
+    no reset, and ``requests`` only grows, so the latch ``exhausted or
+    requests >= quota`` always equals ``requests >= quota`` on the
+    cumulative count: the operator is an ordinary streaming aggregate,
+    planned by the JVM (``StateStoreRestore``/``StateStoreSave`` around a
+    hash aggregate) with no Python state worker. In update mode each
+    micro-batch emits one row per key it touched, carrying cumulative
+    totals. A NULL ``user_id`` is its own key group.
 
-    The error flag is encoded JVM-side BEFORE the stateful exchange: the
-    Python state workers only ever see two LONG columns per row instead
-    of the raw event strings (round-9 — Arrow transfer volume, not state
-    logic, dominated this operator's wall-clock; the string comparison
-    runs in whole-stage codegen where it belongs).
+    The state schema is the aggregate's buffer, not the old
+    ``applyInPandasWithState`` (requests, failures, exhausted) tuple: a
+    checkpoint written by that Python latch cannot be resumed by this one.
     """
-
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            requests, failures, exhausted = state.get
-        else:
-            requests, failures, exhausted = 0, 0, False
-        for pdf in pdfs:
-            requests += len(pdf)
-            failures += int(pdf["err"].sum())
-        exhausted = exhausted or requests >= quota  # the latch: never un-sets
-        state.update((requests, failures, exhausted))
-        yield pd.DataFrame(
-            {
-                "key_id": [key[0]],
-                "total_requests": [requests],
-                "total_failures": [failures],
-                "is_exhausted": [exhausted],
-            }
+    # NULL event_type is not an error: == yields NULL, pinned to 0 here
+    err = F.coalesce((F.col("event_type") == "error").cast("long"), F.lit(0))
+    return (
+        events.groupBy(F.col("user_id").alias("key_id"))
+        .agg(
+            F.count(F.lit(1)).alias("total_requests"),
+            F.sum(err).alias("total_failures"),
         )
-
-    slim = events.select(
-        "user_id",
-        # NULL event_type is not an error (== yields NULL; the old pandas
-        # comparison yielded False) — pin that with an explicit coalesce
-        F.coalesce(
-            (F.col("event_type") == "error").cast("long"), F.lit(0)
-        ).alias("err"),
-    )
-    return slim.groupBy("user_id").applyInPandasWithState(
-        update,
-        LATCH_OUTPUT_SCHEMA,
-        LATCH_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
+        .withColumn("is_exhausted", F.col("total_requests") >= quota)
     )
 
 
@@ -359,12 +311,11 @@ LATCH_GATE_QUOTA = 50  # small quota so the sf0.01 fixture hits the latch
 
 def quota_latch_final(spark, sf_dir: str) -> DataFrame:
     """Driver-gate wrapper: runs the REAL streaming latch (file source →
-    applyInPandasWithState → memory sink, availableNow trigger) and returns
+    streaming aggregate → memory sink, availableNow trigger) and returns
     the final per-key state. The final state is deterministic regardless of
     micro-batch splits (counts are associative; the latch is monotone), so
     a SQL oracle can verify the streaming engine's answer bit-for-bit.
     """
-    import os
     import uuid
 
     from ..sources import load_table
@@ -379,39 +330,12 @@ def quota_latch_final(spark, sf_dir: str) -> DataFrame:
     # fully per-invocation. Cleared by memo.release_session_frames()
     # (deferred past this run if a release races it — _latch_src_acquire).
     name = "latch_gate_" + uuid.uuid4().hex[:8]
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_arrow = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     # acquire LAST and enter the guarded region immediately: anything
     # thrown between acquire and the finally would leak the in-use
     # count and pin the staged dir forever (round-8 review finding)
     src = _latch_src_acquire(spark, sf_dir, events)
     try:
         stream = spark.readStream.schema(events.schema).parquet(src)
-        # State-partition sizing follows the DATA, not a fixed constant
-        # (round-9 verdict: the pinned 8 was right for the 150-key gate
-        # fixture but serialized 1M sf1 rows onto 8 Python state workers,
-        # 4.95 s — profiled: addBatch was ~95% of wall-clock and scaled
-        # with per-worker row volume). The staged dir is a local tempdir
-        # by construction, so its byte size is a free, exact proxy:
-        # ~64 KB of staged parquet per state partition, floored at 8
-        # (state per key is three scalars — below the floor more workers
-        # are pure startup overhead), capped at the session parallelism.
-        staged_bytes = sum(
-            os.path.getsize(os.path.join(src, f))
-            for f in os.listdir(src)
-            if f.endswith(".parquet")
-        )
-        n_parts = max(8, min(
-            spark.sparkContext.defaultParallelism, staged_bytes // 65_536
-        ))
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-        # Bigger Arrow batches for the state exchange: at the default
-        # 10k records the 1M-row sf1 batch pays ~100 Arrow flushes per
-        # partition; 64k batches cut the addBatch wall-clock ~25%
-        # (measured) with bounded memory (two LONG columns per row).
-        spark.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", "65536"
-        )
         q = (
             quota_latch_stream(stream, quota=LATCH_GATE_QUOTA)
             .writeStream.format("memory")
@@ -423,10 +347,6 @@ def quota_latch_final(spark, sf_dir: str) -> DataFrame:
         q.awaitTermination(300)
         q.stop()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", prev_arrow
-        )
         _latch_src_release(src)
     w = "(partition by key_id order by total_requests desc)"
     return (
